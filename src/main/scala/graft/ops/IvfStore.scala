@@ -2,74 +2,47 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Persistent IVF vector index with an LSM DELTA PATH — the embedding
-  * store's counterpart to [[graft.pipeline.Materialize]]'s tombstone log.
-  * The graph store has had append/retract/time-travel since round 6; this
-  * closes the same gap for vectors: new vectors APPEND into existing cells
-  * (one narrow assignment pass against the stored centroids — training
-  * stays periodic, exactly how production IVF indexes absorb writes),
-  * deletions are vec_id tombstones resolved at read time, and compaction
-  * folds both into the base.
+import graft.pipeline.{CheckpointPolicy, PartitionedLsm}
+
+/** Persistent IVF vector index with an LSM DELTA PATH: new vectors APPEND
+  * into existing cells (one narrow assignment pass against the stored
+  * centroids — training stays periodic, exactly how production IVF
+  * indexes absorb writes), deletions are vec_id tombstones, and
+  * compaction folds both into the base. The log, resolution, as-of reads
+  * and compaction are the [[graft.pipeline.PartitionedLsm]] core (its
+  * scaladoc states the rules) keyed on `vec_id`, partitioned by `cell`;
+  * among a vector's live adds the newest batch's vector wins.
   *
   * Layout under `out`:
   *   - `base/` — (vec_id, g, n, cell) parquet partitioned by cell
-  *   - `_delta/` — base columns + (op, batch_seq), partitioned by cell
+  *   - `_delta/`, `_delta_batches/` — the core's log and markers
   *   - `_centroids/` — (k, m) the trained coarse quantizer on the ×1000
   *     integer grid ([[EmbeddingOps.kmeansRefine]]'s convention), so every
   *     append and every search uses THE SAME quantizer the base was built
   *     with (an index is its centroids; a rebuild refreshes both)
-  *   - `_delta_batches/` — one marker file per batch (the O(1) sequence
-  *     counter, the Materialize discipline)
   *
   * Scale shapes: append assigns against centroid LITERALS (cells×dims
   * longs in the plan — nothing collects, nothing joins) and writes bytes
   * ∝ delta (spec-pinned on FS sizes); deletes look the doomed ids' cells
   * up with one broadcast semi-join (the id→cell lookup every real vector
   * store does) so tombstones carry their cell and resolution stays
-  * cell-local; the merged read resolves ONLY delta-touched cells — the
-  * untouched base streams as a pruned scan, no exchange.
+  * cell-local.
   */
 object IvfStore {
 
-  private def baseDir(out: String) = s"$out/base"
-  private def deltaDir(out: String) = s"$out/_delta"
+  private[graft] val Store = new PartitionedLsm("cell", Seq("vec_id"),
+    max(struct(col("batch_seq"), col("g"), col("n"))),
+    StructType.fromDDL("vec_id BIGINT, g ARRAY<BIGINT>, n BIGINT, cell BIGINT"), "base")
+
   private def centDir(out: String) = s"$out/_centroids"
-  private def markerDir(out: String) = s"$out/_delta_batches"
 
-  val OpAdd = "add"
-  val OpDel = "del"
-
-  private def fsOf(spark: SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  private def hasDelta(spark: SparkSession, out: String): Boolean = {
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    fs.exists(dd) && {
-      val it = fs.listFiles(dd, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val name = it.next().getPath.getName
-        found = !name.startsWith("_") && !name.startsWith(".")
-      }
-      found
-    }
-  }
+  val OpAdd: String = PartitionedLsm.OpAdd
+  val OpDel: String = PartitionedLsm.OpDel
 
   /** Delta batches appended since the last [[compact]]/[[write]]. */
-  def deltaBatchCount(spark: SparkSession, out: String): Int = {
-    val (fs, dir) = fsOf(spark, markerDir(out))
-    if (fs.exists(dir)) fs.listStatus(dir).length else 0
-  }
-
-  private def writeMarker(spark: SparkSession, out: String): Unit = {
-    val (fs, dir) = fsOf(spark, markerDir(out))
-    fs.mkdirs(dir)
-    fs.create(new org.apache.hadoop.fs.Path(dir,
-      s"batch-${java.util.UUID.randomUUID()}"), false).close()
-  }
+  def deltaBatchCount(spark: SparkSession, out: String): Int = Store.batchCount(spark, out)
 
   /** Build (or rebuild) the index: assign every vector to its nearest
     * stored-centroid cell (exact ×1000-grid integer distance, ties to the
@@ -85,15 +58,12 @@ object IvfStore {
     EmbeddingOps.gridded(embeddings)
       .withColumn("cell", EmbeddingOps.assignCellExpr(centroids, dims))
       .select(col("vec_id"), col("g"), col("n"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(baseDir(out))
+      .write.mode("overwrite").partitionBy("cell").parquet(Store.baseDir(out))
     import spark.implicits._
     centroids.zipWithIndex.map { case (m, k) => (k.toLong, m.toSeq) }.toSeq
       .toDF("k", "m")
       .coalesce(1).write.mode("overwrite").parquet(centDir(out))
-    val (fs, md) = fsOf(spark, markerDir(out))
-    fs.delete(md, true)
-    val (dfs, dd) = fsOf(spark, deltaDir(out))
-    dfs.delete(dd, true)
+    Store.clearLog(spark, out)
   }
 
   /** The stored coarse quantizer — collect bounded by cells×dims. */
@@ -107,24 +77,9 @@ object IvfStore {
     */
   def appendVectors(spark: SparkSession, out: String, vectors: DataFrame): Unit = {
     val m = centroids(spark, out)
-    val rows = EmbeddingOps.gridded(vectors)
+    Store.append(spark, out, EmbeddingOps.gridded(vectors)
       .withColumn("cell", EmbeddingOps.assignCellExpr(m, m(0).length))
-    // row count observed DURING the write — an isEmpty pre-check would
-    // evaluate the grid+assignment subtree twice (the appendDeltaOps rule)
-    val seq = deltaBatchCount(spark, out) + 1L
-    val obs = new org.apache.spark.sql.Observation(
-      s"ivf.append.${java.util.UUID.randomUUID()}")
-    rows.select(col("vec_id"), col("g"), col("n"), col("cell"),
-      lit(OpAdd).as("op"), lit(seq).as("batch_seq"))
-      .observe(obs, count(lit(1)).as("cnt"))
-      .write.mode("append").partitionBy("cell").parquet(deltaDir(out))
-    if (obs.get("cnt").asInstanceOf[Long] > 0L) writeMarker(spark, out)
-    else {
-      // restore the exact no-op for an empty append (no marker, and no
-      // _SUCCESS-only _delta dir unless earlier batches own it)
-      val (fs, dd) = fsOf(spark, deltaDir(out))
-      if (fs.exists(dd) && !hasDelta(spark, out)) fs.delete(dd, true)
-    }
+      .withColumn("op", lit(OpAdd)))
   }
 
   /** DELETE vectors by id: the doomed ids' cells come from one broadcast
@@ -139,116 +94,36 @@ object IvfStore {
     val doomed = readMerged(spark, out)
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
       .localCheckpoint()
-    if (doomed.isEmpty) return
-    val seq = deltaBatchCount(spark, out) + 1L
-    doomed.select(col("vec_id"), col("g"), col("n"), col("cell"),
-      lit(OpDel).as("op"), lit(seq).as("batch_seq"))
-      .write.mode("append").partitionBy("cell").parquet(deltaDir(out))
-    writeMarker(spark, out)
+    Store.append(spark, out, doomed.withColumn("op", lit(OpDel)))
   }
 
-  /** The live vector set: base ∪ delta with tombstones resolved
-    * latest-batch-wins (within a batch del wins — a batch retracts before
-    * it asserts, the Materialize rule). Only delta-touched CELLS pay the
-    * resolution exchange; with no pending delta this is the plain base
-    * scan.
+  /** The live vector set: base ∪ delta, tombstones resolved. Only
+    * delta-touched CELLS pay the resolution exchange; with no pending
+    * delta this is the plain base scan.
     */
-  def readMerged(spark: SparkSession, out: String): DataFrame = {
-    val base = readBase(spark, out)
-    if (!hasDelta(spark, out)) base
-    else resolveCells(base, spark.read.parquet(deltaDir(out))
-      .withColumn("cell", col("cell").cast("long")))
-  }
+  def readMerged(spark: SparkSession, out: String): DataFrame =
+    Store.mergedRead(spark, out)
 
   /** TIME TRAVEL (the kg60 discipline on the vector store): the live set
-    * as of delta batch `asOf` — tombstone/append batches with
-    * `batch_seq > asOf` are ignored, `asOf = 0` is the base build. Valid
-    * until a [[compact]] folds the log (compaction trades history for
-    * read cost, exactly like the graph store).
+    * as of delta batch `asOf` (≥ 0; 0 is the base build). Valid until a
+    * [[compact]] folds the log.
     */
-  def readAsOf(spark: SparkSession, out: String, asOf: Long): DataFrame = {
-    val base = readBase(spark, out)
-    if (asOf <= 0L || !hasDelta(spark, out)) base
-    else resolveCells(base, spark.read.parquet(deltaDir(out))
-      .withColumn("cell", col("cell").cast("long"))
-      .filter(col("batch_seq") <= asOf))
-  }
+  def readAsOf(spark: SparkSession, out: String, asOf: Long): DataFrame =
+    Store.mergedRead(spark, out, Some(asOf))
 
   /** The full AS-OF EVOLUTION (as_of, vec_id, cell) for as_of ∈ 0..upTo in
     * ONE resolution pass — row-identical to unioning [[readAsOf]] per cut
     * (emb20's shape), but the base and delta scan once, every cut shares
-    * one exchange, and the latest-batch-wins window runs per
-    * (as_of, cell, vec_id) instead of once per cut. A delta row with
-    * batch_seq = b participates in every cut ≥ b (one bounded replicate
-    * join against the literal cut list); untouched base rows replicate
-    * cut-count times outside the exchange.
+    * one exchange, and `as_of` joins the resolution keys. A delta row with
+    * batch_seq = b participates in every cut ≥ b (a bounded explode over
+    * the literal cut list); untouched base rows replicate cut-count times
+    * outside the exchange.
     */
   def readEvolution(spark: SparkSession, out: String, upTo: Long): DataFrame = {
-    require(upTo >= 0L, s"upTo=$upTo must be ≥ 0")
-    val base = readBase(spark, out)
-    val cuts = (0L to upTo).toSeq
-    val cutsCol = array(cuts.map(lit(_)): _*)
-    def withCuts(df: DataFrame, from: org.apache.spark.sql.Column) = df
-      .withColumn("as_of", explode(filter(cutsCol, c => c >= from)))
-    if (!hasDelta(spark, out))
-      return withCuts(base, lit(0L))
-        .select(col("as_of"), col("vec_id"), col("cell"))
-    val deltas = spark.read.parquet(deltaDir(out))
-      .withColumn("cell", col("cell").cast("long"))
-      .filter(col("batch_seq") <= upTo)
-    val touched = deltas.select(col("cell").cast("int")).distinct()
-      .collect().map(_.getInt(0)) // bounded by the cell count, never data
-    if (touched.isEmpty)
-      return withCuts(base, lit(0L))
-        .select(col("as_of"), col("vec_id"), col("cell"))
-    val untouched = withCuts(base.filter(!col("cell").isin(touched: _*)), lit(0L))
-    val rows = withCuts(
-      base.filter(col("cell").isin(touched: _*))
-        .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-        .unionByName(deltas.select(col("vec_id"), col("g"), col("n"),
-          col("cell"), col("op"), col("batch_seq"))),
-      col("batch_seq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("as_of"), col("cell"), col("vec_id"))
-    val resolved = rows
-      .withColumn("_dseq", coalesce(
-        max(when(col("op") === OpDel, col("batch_seq"))).over(w), lit(-1L)))
-      .filter(col("op") === OpAdd && col("batch_seq") > col("_dseq"))
-      .groupBy(col("as_of"), col("cell"), col("vec_id"))
-      .agg(max(struct(col("batch_seq"), col("g"), col("n"))).as("v"))
+    val cuts = array((0L to upTo).map(lit(_)): _*)
+    Store.mergedRead(spark, out, Some(upTo), Seq("as_of"),
+      (df, from) => df.withColumn("as_of", explode(filter(cuts, c => c >= from))))
       .select(col("as_of"), col("vec_id"), col("cell"))
-    untouched.select(col("as_of"), col("vec_id"), col("cell"))
-      .unionByName(resolved)
-  }
-
-  // partition discovery types the cell column as INT on read — pin the
-  // long contract at the boundary
-  private def readBase(spark: SparkSession, out: String): DataFrame =
-    spark.read.parquet(baseDir(out))
-      .select(col("vec_id"), col("g"), col("n"), col("cell").cast("long").as("cell"))
-
-  /** Latest-batch-wins resolution over the delta-touched cells only; the
-    * untouched base streams as a pruned scan, no exchange.
-    */
-  private def resolveCells(base: DataFrame, deltas: DataFrame): DataFrame = {
-    val touched = deltas.select(col("cell").cast("int")).distinct()
-      .collect().map(_.getInt(0)) // bounded by the cell count, never data
-    if (touched.isEmpty) return base
-    val untouched = base.filter(!col("cell").isin(touched: _*))
-    val rows = base.filter(col("cell").isin(touched: _*))
-      .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-      .unionByName(deltas.select(col("vec_id"), col("g"), col("n"),
-        col("cell"), col("op"), col("batch_seq")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cell"), col("vec_id"))
-    val resolved = rows
-      .withColumn("_dseq", coalesce(
-        max(when(col("op") === OpDel, col("batch_seq"))).over(w), lit(-1L)))
-      .filter(col("op") === OpAdd && col("batch_seq") > col("_dseq"))
-      .groupBy(col("cell"), col("vec_id"))
-      .agg(max(struct(col("batch_seq"), col("g"), col("n"))).as("v"))
-      .select(col("vec_id"), col("v.g").as("g"), col("v.n").as("n"), col("cell"))
-    untouched.unionByName(resolved)
   }
 
   /** IVF top-k over the LIVE set: [[EmbeddingOps.annWithinKey]] on the
@@ -258,54 +133,11 @@ object IvfStore {
   def searchTopK(spark: SparkSession, out: String, k: Int): DataFrame =
     EmbeddingOps.annWithinKey(readMerged(spark, out), "cell", k)
 
-  /** Fold the delta log into the base (dynamic overwrite of touched cell
-    * partitions only) and clear it. Tombstones are consumed here.
+  /** Fold the delta log into the base (touched cells only, emptied cells
+    * deleted) and clear it. Tombstones are consumed here.
     */
   def compact(
       spark: SparkSession, out: String,
-      checkpoint: graft.pipeline.CheckpointPolicy =
-        graft.pipeline.CheckpointPolicy.Local): Unit = {
-    if (!hasDelta(spark, out)) return
-    val deltas = spark.read.parquet(deltaDir(out))
-      .withColumn("cell", col("cell").cast("long"))
-    val touched = deltas.select(col("cell").cast("int")).distinct()
-      .collect().map(_.getInt(0))
-    val base = spark.read.parquet(baseDir(out))
-      .select(col("vec_id"), col("g"), col("n"), col("cell").cast("long").as("cell"))
-    val rows = base.filter(col("cell").isin(touched: _*))
-      .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-      .unionByName(deltas.select(col("vec_id"), col("g"), col("n"),
-        col("cell"), col("op"), col("batch_seq")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cell"), col("vec_id"))
-    val resolved = checkpoint.truncate(rows
-      .withColumn("_dseq", coalesce(
-        max(when(col("op") === OpDel, col("batch_seq"))).over(w), lit(-1L)))
-      .filter(col("op") === OpAdd && col("batch_seq") > col("_dseq"))
-      .groupBy(col("cell"), col("vec_id"))
-      .agg(max(struct(col("batch_seq"), col("g"), col("n"))).as("v"))
-      .select(col("vec_id"), col("v.g").as("g"), col("v.n").as("n"), col("cell")))
-    val obs2 = new org.apache.spark.sql.Observation(
-      s"ivf.compact.${java.util.UUID.randomUUID()}")
-    resolved.observe(obs2, collect_set(col("cell")).as("c"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(baseDir(out))
-    // dynamic overwrite only replaces partitions PRESENT in the written
-    // data: a touched cell whose vectors were ALL tombstoned emits no
-    // resolved rows, and its stale base files would serve the deleted
-    // vectors again once the delta log is dropped below. Delete emptied
-    // cell partitions explicitly (the ViewStore.foldInto discipline); the
-    // surviving set rides the write job as an observed metric.
-    val surviving = obs2.get("c").asInstanceOf[Seq[Long]].map(_.toInt).toSet
-    val (bfs2, broot) = fsOf(spark, baseDir(out))
-    touched.filterNot(surviving).foreach { c =>
-      bfs2.delete(new org.apache.hadoop.fs.Path(broot, s"cell=$c"), true)
-    }
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    fs.delete(dd, true)
-    val (mfs, md) = fsOf(spark, markerDir(out))
-    mfs.delete(md, true)
-  }
+      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit =
+    Store.compact(spark, out, checkpoint)
 }

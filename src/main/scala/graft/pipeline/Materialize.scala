@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Graph-table materialization: dedup, predicate-hash partitioning, and
   * explicit skew handling.
@@ -74,6 +75,29 @@ object Materialize {
     pmod(xxhash64(col("subj")), s)
   }
 
+  private val Prov = min(struct(col("src_url"), col("warc_ts")))
+
+  /** The graph tables' [[PartitionedLsm]] cores (the LSM rules live
+    * there). Quads add `graph` to every content key: named graphs share
+    * the pred_hash layout, but a retraction only hides its own graph's
+    * quad. A table is triples or quads for its lifetime.
+    */
+  private[graft] val Triples = new PartitionedLsm("pred_hash", Seq("subj", "pred", "obj"), Prov,
+    StructType.fromDDL(
+      "subj STRING, pred STRING, obj STRING, src_url STRING, warc_ts TIMESTAMP, pred_hash INT"))
+  private[graft] val Quads = new PartitionedLsm("pred_hash", Seq("graph", "subj", "pred", "obj"),
+    Prov, StructType.fromDDL("graph STRING, subj STRING, pred STRING, obj STRING, " +
+      "src_url STRING, warc_ts TIMESTAMP, pred_hash INT"))
+
+  val OpAdd: String = PartitionedLsm.OpAdd
+  val OpDel: String = PartitionedLsm.OpDel
+
+  private def salted(
+      df: DataFrame, predBuckets: Int, plan: Map[String, Int], salt: Int): DataFrame =
+    withPredHash(df, predBuckets)
+      .withColumn("subj_salt", saltCol(plan, salt))
+      .repartition(col("pred_hash"), col("subj_salt"))
+
   /** Dedup + partition — ONE shuffle of the triple table (the largest
     * table in the job; round 1 shuffled it twice: a dropDuplicates
     * exchange on hash(s,p,o) followed by the salted repartition).
@@ -87,21 +111,28 @@ object Materialize {
     * shuffle→aggregate→write pipeline is one exchange, and the write
     * stays clustered by pred_hash. Provenance per (s,p,o) is the MIN
     * (src_url, warc_ts) pair — deterministic, unlike dropDuplicates-first.
+    * `carry` columns (a delta batch's `op`) join the group keys.
     */
+  private def deduped(
+      lsm: PartitionedLsm, df: DataFrame, predBuckets: Int, plan: Map[String, Int],
+      salt: Int, carry: Seq[String] = Nil): DataFrame =
+    lsm.pickPerKey(salted(df, predBuckets, plan, salt),
+      Seq("pred_hash", "subj_salt") ++ lsm.keyCols ++ carry, carry)
+
   private[pipeline] def saltedDeduped(
       triples: DataFrame,
       predBuckets: Int,
       plan: Map[String, Int],
-      defaultSalt: Int): DataFrame = {
-    val df = withPredHash(triples, predBuckets)
-      .withColumn("subj_salt", saltCol(plan, defaultSalt))
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"), col("subj"), col("pred"), col("obj"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("pred_hash"))
-  }
+      defaultSalt: Int): DataFrame =
+    deduped(Triples, triples, predBuckets, plan, defaultSalt)
+
+  private def writeBase(
+      lsm: PartitionedLsm, df: DataFrame, out: String, predBuckets: Int,
+      plan: Map[String, Int], salt: Int): Unit =
+    deduped(lsm, df, predBuckets, plan, salt)
+      .write.mode("overwrite")
+      .partitionBy("pred_hash")
+      .parquet(out)
 
   /** Fixed-salt write (every predicate fans out ×`salt`). */
   def write(
@@ -109,10 +140,17 @@ object Materialize {
       out: String,
       predBuckets: Int = DefaultPredBuckets,
       salt: Int = DefaultSalt): Unit =
-    saltedDeduped(triples.toDF(), predBuckets, Map.empty, salt)
-      .write.mode("overwrite")
-      .partitionBy("pred_hash")
-      .parquet(out)
+    writeBase(Triples, triples.toDF(), out, predBuckets, Map.empty, salt)
+
+  /** [[write]] for quads (graph, subj, pred, obj, src_url, warc_ts): the
+    * same one-exchange dedup+write with `graph` in the group keys.
+    */
+  def writeQuads(
+      quads: DataFrame,
+      out: String,
+      predBuckets: Int = DefaultPredBuckets,
+      salt: Int = DefaultSalt): Unit =
+    writeBase(Quads, quads, out, predBuckets, Map.empty, salt)
 
   /** Data-driven write: salt factors picked per predicate from
     * `predCounts` (caller estimates — e.g. from stage manifests — avoid a
@@ -136,40 +174,29 @@ object Materialize {
     // fan unplanned predicates out beyond maxSalt
     val baseSalt = math.min(maxSalt,
       math.max(1, (2 * shuffleP + counts.size - 1) / math.max(counts.size, 1)))
-    val plan = saltPlan(counts, targetRowsPerSalt, maxSalt, baseSalt)
-    saltedDeduped(df, predBuckets, plan, baseSalt)
-      .write.mode("overwrite")
-      .partitionBy("pred_hash")
-      .parquet(out)
+    writeBase(Triples, df, out, predBuckets,
+      saltPlan(counts, targetRowsPerSalt, maxSalt, baseSalt), baseSalt)
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =
     spark.read.parquet(out)
 
-  /** DELTA-MERGE a batch of new triples into an existing graph table by
-    * rewriting ONLY the `pred_hash` partitions the delta touches (dynamic
-    * partition overwrite) — the incremental-update path at 100 TB, where a
-    * daily crawl delta is ≪ the graph and a full rewrite is the thing to
-    * avoid. Steps: (1) the touched partition set — bounded by
-    * `predBuckets`, never by data — prunes the existing-side read to those
-    * partitions (PartitionFilters); (2) existing ∪ delta goes through the
-    * same one-exchange [[saltedDeduped]] as a full write, so merged
-    * duplicates collapse with the same deterministic min-provenance rule;
-    * (3) the result is materialized through `checkpoint` BEFORE the write
-    * (Spark refuses to overwrite a path it is still reading from; at
-    * cluster scale pass [[CheckpointPolicy.Reliable]] so the staged merge
-    * lives on DFS, or swap this class for a real table format — Iceberg/
-    * Delta snapshots are exactly this operation) and written with
-    * per-write `partitionOverwriteMode=dynamic` (no session conf
-    * mutation): untouched partitions are never listed, read, or replaced
-    * (PipelineSpec pins byte-identical untouched partition files).
-    * Operational caveats at cluster scale: run dynamic overwrite under
-    * the DEFAULT (v1) file output committer — the v2 committer's
-    * task-commit renames interact badly with overwrite staging on task
-    * retry — and note that Local-policy staging blocks are reclaimed by
-    * the ContextCleaner when the batch's Dataset is collected; a long
-    * foreachBatch merge loop should pass `Reliable(dir)` and prune the
-    * dir on its own schedule.
+  // ------------------------------------------------------ incremental paths
+  //
+  // The LSM family: appendDelta lands a batch under `out/_delta` (bytes ∝
+  // delta, never ∝ partition), readMerged serves base ∪ log resolved, and
+  // compact folds the log into the touched pred_hash partitions — one
+  // heavy rewrite amortized over many cheap appends. mergeDelta is the
+  // eager form (append, then compact at once). Every rule (tombstones,
+  // batch order, emptied partitions, as-of history) is [[PartitionedLsm]]'s.
+
+  /** Merge a batch of new triples into the base now: append it, then
+    * compact — only the pred_hash partitions the batch (and any pending
+    * log) touches are read and rewritten; untouched partitions are never
+    * listed or replaced (PipelineSpec pins byte-identical files). A
+    * pending retraction of a re-asserted triple resolves like any other
+    * batch: the newer assertion wins. Re-merging an applied batch leaves
+    * the graph unchanged.
     */
   def mergeDelta(
       spark: org.apache.spark.sql.SparkSession,
@@ -177,93 +204,14 @@ object Materialize {
       delta: Dataset[TripleRow],
       predBuckets: Int = DefaultPredBuckets,
       salt: Int = DefaultSalt,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
-    // the delta subtree is consumed twice (touched-set collect + the
-    // merge union) — materialize it once through the policy
-    val deltaDf = checkpoint.truncate(delta.toDF())
-    val touched = withPredHash(deltaDf, predBuckets)
-      .select(col("pred_hash")).distinct()
-      .collect().map(_.getLong(0))
-    val existing = read(spark, out)
-      .filter(col("pred_hash").isin(touched: _*))
-      .select(col("subj"), col("pred"), col("obj"), col("src_url"), col("warc_ts"))
-    val merged = checkpoint.truncate(
-      saltedDeduped(existing.unionByName(deltaDf), predBuckets, Map.empty, salt))
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pred_hash")
-      .parquet(out)
-  }
+      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit =
+    mergeDeltaLsm(spark, out, delta, predBuckets, salt, maxDeltaBatches = 1, checkpoint)
 
-  // -------------------------------------------------- LSM-style delta path
-  //
-  // [[mergeDelta]] is CORRECT but its overwrite grain is a whole pred_hash
-  // partition: a daily delta holding even one rdf:type triple reads and
-  // rewrites the entire rdf:type bucket — at 100 TB a ~terabyte rewrite for
-  // a kilobyte delta, every batch. The LSM path bounds that write
-  // amplification the way every log-structured table format does:
-  // [[appendDelta]] lands each batch as APPEND-ONLY files under
-  // `out/_delta` (bytes written ∝ delta, never ∝ partition — spec-pinned
-  // on FS sizes), [[readMerged]] serves the merged view with dedup-on-read,
-  // and [[compact]] folds all accumulated deltas into the base in ONE
-  // touched-partition rewrite, amortizing the heavy overwrite across many
-  // cheap appends. `_delta` is underscore-prefixed, so [[read]] (and every
-  // plain parquet reader) ignores it and keeps seeing the consistent base.
-  //
-  // TOMBSTONES: every delta row carries `op` ∈ {add, del} and a
-  // monotonically increasing `batch_seq` (base rows are implicitly
-  // (add, 0)). A re-crawled page whose new parse DROPS triples can retract
-  // them: per (s,p,o) the LATEST state wins — a triple is present iff some
-  // add outlives every del (strictly newer batch; within one batch del
-  // wins, so a batch is a set of retractions applied before its
-  // assertions). Provenance of a surviving triple is the MIN (src_url,
-  // warc_ts) among the adds since it last came into existence — the same
-  // deterministic rule a full build applies, now windowed to the live
-  // assertions. [[compact]] resolves and DROPS tombstones (the rewritten
-  // base is the resolved state). The batch sequence comes from the marker
-  // log — the delta log has a single writer per table (the standard LSM
-  // assumption; concurrent writers need a real table format's commit
-  // protocol).
-
-  private def deltaDir(out: String) = s"$out/_delta"
-  private def batchMarkerDir(out: String) = s"$out/_delta_batches"
-
-  val OpAdd = "add"
-  val OpDel = "del"
-
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  /** True iff `dir` contains at least one non-hidden data file — guards
-    * readers against a `_delta` dir holding only `_SUCCESS` (an empty
-    * append), which parquet schema inference would otherwise reject.
-    */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val name = it.next().getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) return true
-    }
-    false
-  }
-
-  /** Pending deltas exist (dir present AND holds real data files). */
-  private def pendingDeltas(spark: org.apache.spark.sql.SparkSession, out: String): Boolean = {
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    fs.exists(dd) && hasDataFiles(fs, dd)
-  }
-
-  /** Append one delta batch under `out/_delta` (same schema + pred_hash
-    * partition layout as the base, plus `op`/`batch_seq`) plus a batch
-    * marker for the compaction trigger. Within-batch dedup only —
-    * cross-batch duplicates resolve at [[readMerged]]/[[compact]], so
-    * repeated appends of the same delta stay idempotent at the read
-    * surface. An EMPTY delta is a no-op (no files, no marker). Rows are
-    * assertions; for retractions pass (op, …) rows to [[appendDeltaOps]]
-    * or a diff to [[applyDiff]].
+  /** Append one batch of assertions under `out/_delta` (within-batch
+    * dedup rides the salted exchange; cross-batch duplicates resolve at
+    * [[readMerged]]/[[compact]], so repeated appends stay idempotent at
+    * the read surface). An empty delta is a no-op. For retractions pass
+    * (op, …) rows to [[appendDeltaOps]] or a diff to [[applyDiff]].
     */
   def appendDelta(
       spark: org.apache.spark.sql.SparkSession,
@@ -284,192 +232,75 @@ object Materialize {
       out: String,
       deltaOps: DataFrame,
       predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit = {
-    val ops = deltaOps.select(col("subj"), col("pred"), col("obj"),
-      col("src_url"), col("warc_ts"), col("op"))
-    val seq = deltaBatchCount(spark, out) + 1L
-    val df = withPredHash(ops, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-    // count rows DURING the write (observe rides the job) instead of a
-    // separate isEmpty pre-check — the former shape evaluated the caller's
-    // delta subtree twice per append (once for the probe, once for the
-    // write). An empty append writes no data files (readers' hasDataFiles
-    // guard already ignores a _SUCCESS-only _delta dir); it must not leave
-    // a batch marker, or the compaction trigger and batch_seq would count
-    // phantom batches.
-    val obs = new org.apache.spark.sql.Observation(
-      s"lsm.append.${java.util.UUID.randomUUID()}")
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"),
-        col("subj"), col("pred"), col("obj"), col("op"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("op"), lit(seq).as("batch_seq"), col("pred_hash"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("pred_hash").parquet(deltaDir(out))
-    if (obs.get("n").asInstanceOf[Long] > 0L) {
-      val (fs, dir) = fsOf(spark, batchMarkerDir(out))
-      fs.mkdirs(dir)
-      fs.create(new org.apache.hadoop.fs.Path(dir,
-        s"batch-${java.util.UUID.randomUUID()}"), false).close()
-    } else {
-      // restore the exact no-op: an empty append must leave no _delta dir
-      // behind (spec-pinned) — but only when the dir holds no earlier
-      // batches' data files
-      val (fs, dd) = fsOf(spark, deltaDir(out))
-      if (fs.exists(dd) && !hasDataFiles(fs, dd)) fs.delete(dd, true)
-    }
-  }
+      salt: Int = DefaultSalt): Unit =
+    appendOps(Triples, spark, out, deltaOps, predBuckets, salt)
+
+  /** [[appendDeltaOps]] for quad deltas (…, graph, op). */
+  def appendQuadDeltaOps(
+      spark: org.apache.spark.sql.SparkSession,
+      out: String,
+      deltaOps: DataFrame,
+      predBuckets: Int = DefaultPredBuckets,
+      salt: Int = DefaultSalt): Unit =
+    appendOps(Quads, spark, out, deltaOps, predBuckets, salt)
+
+  private def appendOps(
+      lsm: PartitionedLsm, spark: org.apache.spark.sql.SparkSession, out: String,
+      deltaOps: DataFrame, predBuckets: Int, salt: Int): Unit =
+    lsm.append(spark, out, deduped(lsm,
+      deltaOps.select((lsm.dataCols :+ "op").map(col): _*),
+      predBuckets, Map.empty, salt, carry = Seq("op")))
 
   /** Number of delta batches appended since the last [[compact]]. */
-  def deltaBatchCount(spark: org.apache.spark.sql.SparkSession, out: String): Int = {
-    val (fs, dir) = fsOf(spark, batchMarkerDir(out))
-    if (fs.exists(dir)) fs.listStatus(dir).length else 0
-  }
+  def deltaBatchCount(spark: org.apache.spark.sql.SparkSession, out: String): Int =
+    Triples.batchCount(spark, out)
 
-  /** Tombstone resolution over (…, op, batch_seq) rows already clustered
-    * by a hash partitioning whose expressions are a subset of `keys`: a
-    * window over `keys` finds each triple's latest retraction seq, adds
-    * strictly newer than it survive, and the surviving assertions collapse
-    * to the MIN provenance — window + filter + aggregate all ride the
-    * SAME clustering, so the whole resolution costs the ONE exchange the
-    * caller already paid.
-    */
-  private def resolveOps(
-      rows: DataFrame, keys: Seq[String],
-      carry: Seq[String] = Seq("subj", "pred", "obj")): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    rows
-      .withColumn("_dseq",
-        coalesce(max(when(col("op") === OpDel, col("batch_seq"))).over(w), lit(-1L)))
-      .filter(col("op") === OpAdd && col("batch_seq") > col("_dseq"))
-      .groupBy(keys.map(col): _*)
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(carry.map(col) ++ Seq(
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("pred_hash")): _*)
-  }
-
-  /** The merged view: base ∪ pending deltas with tombstones resolved and
-    * the same deterministic min-provenance rule a full write applies. With
-    * no pending deltas this IS [[read]] — zero overhead. With deltas, ONLY
-    * the pred_hash partitions the deltas touch pay the resolution exchange:
-    * the (vast, at 100 TB) untouched remainder of the base streams through
-    * as a plain pruned scan — merge-on-read, not shuffle-the-world
-    * (plan-guarded: the untouched branch has no Exchange). The touched set
-    * is bounded by predBuckets, never by data.
+  /** The merged view: base ∪ pending deltas, tombstones resolved, the
+    * min-provenance rule a full write applies. With no pending deltas
+    * this is the base scan; otherwise only the delta-touched pred_hash
+    * partitions pay the resolution exchange (plan-guarded).
     */
   def readMerged(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =
-    mergedView(spark, out, None)
+    Triples.mergedRead(spark, out)
 
-  /** TIME-TRAVEL read: the graph as of delta batch `asOfSeq` — the base
-    * plus only delta batches with `batch_seq` ≤ `asOfSeq`, tombstones
-    * resolved by the same latest-batch-wins rule. `asOfSeq = 0` is the
-    * bare base; [[deltaBatchCount]] is "now". The travel window is the
-    * CURRENT delta log: [[compact]] consumes history (the rewritten base
-    * becomes the new seq-0), exactly a lakehouse VACUUM/retention
-    * trade-off — callers that need deeper history compact less often.
-    * Same bounded merge-on-read plan as [[readMerged]]: only partitions
-    * touched by the ≤ asOfSeq batches pay the resolution exchange.
+  /** [[readMerged]] for quad tables: retractions stay scoped to their
+    * named graph.
+    */
+  def readMergedQuads(spark: org.apache.spark.sql.SparkSession, out: String): DataFrame =
+    Quads.mergedRead(spark, out)
+
+  /** TIME-TRAVEL read: the graph as of delta batch `asOfSeq` (≥ 0; 0 is
+    * the bare base, [[deltaBatchCount]] is "now", beyond it clamps to now).
+    * The travel window is the current delta log — [[compact]] consumes
+    * history. Same bounded merge-on-read plan as [[readMerged]].
     */
   def readAsOf(
-      spark: org.apache.spark.sql.SparkSession, out: String, asOfSeq: Long): DataFrame = {
-    require(asOfSeq >= 0L, s"asOfSeq=$asOfSeq must be ≥ 0")
-    mergedView(spark, out, Some(asOfSeq))
-  }
+      spark: org.apache.spark.sql.SparkSession, out: String, asOfSeq: Long): DataFrame =
+    Triples.mergedRead(spark, out, Some(asOfSeq))
 
-  private def mergedView(
-      spark: org.apache.spark.sql.SparkSession, out: String,
-      asOf: Option[Long]): DataFrame = {
-    val base = read(spark, out)
-    if (!pendingDeltas(spark, out) || asOf.contains(0L)) base
-    else {
-      val deltas = asOf.foldLeft(spark.read.parquet(deltaDir(out)))(
-        (d, seq) => d.filter(col("batch_seq") <= seq))
-      // partition discovery types pred_hash as int — align before isin;
-      // under an asOf cut the touched set shrinks to the CUT's partitions
-      val touched = deltas.select(col("pred_hash").cast("int")).distinct()
-        .collect().map(_.getInt(0)) // bounded by predBuckets, never by data
-      val outCols = Seq("subj", "pred", "obj", "src_url", "warc_ts", "pred_hash").map(col)
-      if (touched.isEmpty) base // the asOf cut excludes every pending batch
-      else {
-        val untouched = base.filter(!col("pred_hash").isin(touched: _*)).select(outCols: _*)
-        val rows = base.filter(col("pred_hash").isin(touched: _*))
-          .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-          .unionByName(deltas)
-        val merged = resolveOps(
-          rows.repartition(col("pred_hash"), col("subj"), col("pred"), col("obj")),
-          Seq("pred_hash", "subj", "pred", "obj"))
-        untouched.unionByName(merged)
-      }
-    }
-  }
-
-  /** Fold all pending deltas into the base: one [[mergeDelta]]-shaped
-    * touched-partition rewrite (existing ∪ deltas resolved inside the one
-    * salted exchange — the resolution window/filter/aggregate all ride the
-    * repartition's clustering — then dynamic partition overwrite; untouched
-    * partitions never listed or rewritten), then drop the delta log.
-    * Tombstones are consumed here: the rewritten base IS the resolved
-    * state, so retractions cost nothing after compaction. No-op when no
-    * deltas are pending.
+  /** Fold all pending deltas into the base: the resolution rides the same
+    * salted (pred_hash, subj_salt) exchange a full write uses, touched
+    * partitions are dynamically overwritten (emptied ones deleted), and
+    * the log is dropped. No-op when no deltas are pending.
     */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       out: String,
       predBuckets: Int = DefaultPredBuckets,
       salt: Int = DefaultSalt,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
-    if (!pendingDeltas(spark, out)) return
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    val deltas = spark.read.parquet(deltaDir(out))
-    // partition discovery types pred_hash as int — cast before collecting
-    val touched = deltas.select(col("pred_hash").cast("long")).distinct()
-      .collect().map(_.getLong(0)) // bounded by predBuckets, never by data
-    val opCols = Seq("subj", "pred", "obj", "src_url", "warc_ts", "op", "batch_seq")
-    val existing = read(spark, out)
-      .filter(col("pred_hash").isin(touched: _*))
-      .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-    val rows = existing.select(opCols.map(col): _*)
-      .unionByName(deltas.select(opCols.map(col): _*))
-    val salted = withPredHash(rows, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-      .repartition(col("pred_hash"), col("subj_salt"))
-    val merged = checkpoint.truncate(
-      resolveOps(salted, Seq("pred_hash", "subj_salt", "subj", "pred", "obj")))
-    val obs = new org.apache.spark.sql.Observation(
-      s"lsm.compact.${java.util.UUID.randomUUID()}")
-    merged.observe(obs, collect_set(col("pred_hash").cast("long")).as("ph"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pred_hash")
-      .parquet(out)
-    // a touched pred_hash partition whose triples were ALL retracted emits
-    // no resolved rows; dynamic overwrite would keep its stale base files
-    // while the delta log is dropped below, resurrecting the retractions.
-    // Delete emptied partitions explicitly (the ViewStore invariant); the
-    // surviving set rides the write job as an observed metric.
-    deleteEmptiedPartitions(spark, out, touched,
-      obs.get("ph").asInstanceOf[Seq[Long]].toSet)
-    fs.delete(dd, true)
-    val (bfs, bd) = fsOf(spark, batchMarkerDir(out))
-    bfs.delete(bd, true)
-  }
+      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit =
+    Triples.compact(spark, out, checkpoint, Seq("subj_salt"),
+      salted(_, predBuckets, Map.empty, salt))
 
-  /** Explicitly delete `pred_hash=N` partition dirs that were touched by a
-    * compaction but absent from its resolved output (dynamic overwrite
-    * only replaces partitions present in the written data).
-    */
-  private def deleteEmptiedPartitions(
-      spark: org.apache.spark.sql.SparkSession, out: String,
-      touched: Array[Long], surviving: Set[Long]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { ph =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"pred_hash=$ph"), true)
-    }
-  }
+  /** [[compact]] for quad tables. */
+  def compactQuads(
+      spark: org.apache.spark.sql.SparkSession,
+      out: String,
+      predBuckets: Int = DefaultPredBuckets,
+      salt: Int = DefaultSalt,
+      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit =
+    Quads.compact(spark, out, checkpoint, Seq("subj_salt"),
+      salted(_, predBuckets, Map.empty, salt))
 
   /** The LSM merge entry point: append the batch (cheap — bytes ∝ delta),
     * compact once `maxDeltaBatches` have accumulated. The incremental-
@@ -577,159 +408,7 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession,
       out: String,
       pred: String,
-      predBuckets: Int = DefaultPredBuckets): DataFrame = {
-    val ph = pmod(xxhash64(lit(pred)), lit(predBuckets))
-    val base = read(spark, out)
-      .filter(col("pred_hash") === ph && col("pred") === pred)
-    if (!pendingDeltas(spark, out)) base
-    else {
-      val deltas = spark.read.parquet(deltaDir(out))
-        .filter(col("pred_hash") === ph && col("pred") === pred)
-      val rows = base
-        .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-        .unionByName(deltas)
-      resolveOps(
-        rows.repartition(col("pred_hash"), col("subj"), col("pred"), col("obj")),
-        Seq("pred_hash", "subj", "pred", "obj"))
-    }
-  }
-
-  // ----------------------------------------------------- QUAD (named-graph)
-  // tables: the triple layout with a `graph` column riding every content
-  // row AND every dedup/resolution key — named graphs share pred_hash
-  // partitions (the layout stays predicate-driven: BGPs prune the same
-  // way), but a (graph, s, p, o) quad is a distinct fact from its sibling
-  // graphs' (s, p, o), so tombstones retract WITHIN one graph only. The
-  // delta log, batch markers, and LSM discipline are shared with the
-  // triple path — a table is either triples or quads for its lifetime.
-
-  private val QuadKeys = Seq("pred_hash", "graph", "subj", "pred", "obj")
-  private val QuadCarry = Seq("graph", "subj", "pred", "obj")
-
-  /** [[write]] for quads (graph, subj, pred, obj, src_url, warc_ts):
-    * the same ONE-exchange dedup+write — graph joins the group keys,
-    * which stay a superset of the (pred_hash, subj_salt) partitioning.
-    */
-  def writeQuads(
-      quads: DataFrame,
-      out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit = {
-    val df = withPredHash(quads, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"),
-        col("graph"), col("subj"), col("pred"), col("obj"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("graph"), col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("pred_hash"))
-      .write.mode("overwrite")
-      .partitionBy("pred_hash")
-      .parquet(out)
-  }
-
-  /** [[appendDeltaOps]] for quad deltas (…, graph, op): one delta-sized
-    * salted exchange, bytes written ∝ delta; tombstones are graph-scoped.
-    */
-  def appendQuadDeltaOps(
-      spark: org.apache.spark.sql.SparkSession,
-      out: String,
-      deltaOps: DataFrame,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt): Unit = {
-    val ops = deltaOps.select(col("graph"), col("subj"), col("pred"), col("obj"),
-      col("src_url"), col("warc_ts"), col("op"))
-    val seq = deltaBatchCount(spark, out) + 1L
-    val df = withPredHash(ops, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-    // row count observed DURING the write replaces the isEmpty pre-check
-    // (which evaluated the delta subtree twice) — see appendDeltaOps
-    val obs = new org.apache.spark.sql.Observation(
-      s"lsm.appendq.${java.util.UUID.randomUUID()}")
-    df.repartition(col("pred_hash"), col("subj_salt"))
-      .groupBy(col("pred_hash"), col("subj_salt"),
-        col("graph"), col("subj"), col("pred"), col("obj"), col("op"))
-      .agg(min(struct(col("src_url"), col("warc_ts"))).as("prov"))
-      .select(col("graph"), col("subj"), col("pred"), col("obj"),
-        col("prov.src_url").as("src_url"), col("prov.warc_ts").as("warc_ts"),
-        col("op"), lit(seq).as("batch_seq"), col("pred_hash"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("pred_hash").parquet(deltaDir(out))
-    if (obs.get("n").asInstanceOf[Long] > 0L) {
-      val (fs, dir) = fsOf(spark, batchMarkerDir(out))
-      fs.mkdirs(dir)
-      fs.create(new org.apache.hadoop.fs.Path(dir,
-        s"batch-${java.util.UUID.randomUUID()}"), false).close()
-    } else {
-      val (fs, dd) = fsOf(spark, deltaDir(out))
-      if (fs.exists(dd) && !hasDataFiles(fs, dd)) fs.delete(dd, true)
-    }
-  }
-
-  /** [[readMerged]] for quad tables: identical bounded merge-on-read —
-    * only delta-touched pred_hash partitions pay the resolution exchange,
-    * with `graph` in the window/group keys so retractions stay scoped to
-    * their named graph.
-    */
-  def readMergedQuads(
-      spark: org.apache.spark.sql.SparkSession, out: String): DataFrame = {
-    val base = read(spark, out)
-    if (!pendingDeltas(spark, out)) base
-    else {
-      val deltas = spark.read.parquet(deltaDir(out))
-      val touched = deltas.select(col("pred_hash").cast("int")).distinct()
-        .collect().map(_.getInt(0)) // bounded by predBuckets, never by data
-      val outCols = (QuadCarry ++ Seq("src_url", "warc_ts", "pred_hash")).map(col)
-      val untouched = base.filter(!col("pred_hash").isin(touched: _*)).select(outCols: _*)
-      val rows = base.filter(col("pred_hash").isin(touched: _*))
-        .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-        .unionByName(deltas)
-      val merged = resolveOps(
-        rows.repartition(QuadKeys.map(col): _*), QuadKeys, QuadCarry)
-      untouched.unionByName(merged)
-    }
-  }
-
-  /** [[compact]] for quad tables: fold the delta log into the base with
-    * the graph-scoped resolution riding the one salted exchange, then
-    * drop the log.
-    */
-  def compactQuads(
-      spark: org.apache.spark.sql.SparkSession,
-      out: String,
-      predBuckets: Int = DefaultPredBuckets,
-      salt: Int = DefaultSalt,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): Unit = {
-    if (!pendingDeltas(spark, out)) return
-    val (fs, dd) = fsOf(spark, deltaDir(out))
-    val deltas = spark.read.parquet(deltaDir(out))
-    val touched = deltas.select(col("pred_hash").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    val opCols = QuadCarry ++ Seq("src_url", "warc_ts", "op", "batch_seq")
-    val existing = read(spark, out)
-      .filter(col("pred_hash").isin(touched: _*))
-      .withColumn("op", lit(OpAdd)).withColumn("batch_seq", lit(0L))
-    val rows = existing.select(opCols.map(col): _*)
-      .unionByName(deltas.select(opCols.map(col): _*))
-    val salted = withPredHash(rows, predBuckets)
-      .withColumn("subj_salt", saltCol(Map.empty, salt))
-      .repartition(col("pred_hash"), col("subj_salt"))
-    val merged = checkpoint.truncate(
-      resolveOps(salted,
-        Seq("pred_hash", "subj_salt", "graph", "subj", "pred", "obj"), QuadCarry))
-    val obsQ = new org.apache.spark.sql.Observation(
-      s"lsm.compactq.${java.util.UUID.randomUUID()}")
-    merged.observe(obsQ, collect_set(col("pred_hash").cast("long")).as("ph"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pred_hash")
-      .parquet(out)
-    // same emptied-partition gap as the triple compact(): see there
-    deleteEmptiedPartitions(spark, out, touched,
-      obsQ.get("ph").asInstanceOf[Seq[Long]].toSet)
-    fs.delete(dd, true)
-    val (bfs, bd) = fsOf(spark, batchMarkerDir(out))
-    bfs.delete(bd, true)
-  }
+      predBuckets: Int = DefaultPredBuckets): DataFrame =
+    Triples.readPartition(spark, out,
+      col("pred_hash") === pmod(xxhash64(lit(pred)), lit(predBuckets)) && col("pred") === pred)
 }

@@ -17,10 +17,11 @@ import org.apache.spark.sql.functions._
   * on duplicate adds (the LSM store is a set; the view is a multiplicity
   * ledger), so the API takes the diff, not the batch.
   *
-  * Scale shape (the [[Materialize.mergeDelta]] discipline): the delta
-  * aggregate is ∝ diff; only diff-touched `key_hash` partitions are read
-  * and dynamically overwritten — work ∝ diff + touched partitions, never
-  * ∝ view. Keys folding to n ≤ 0 leave the view.
+  * Scale shape: the delta aggregate is ∝ diff; only diff-touched
+  * `key_hash` partitions are read and rewritten through
+  * [[PartitionedLsm.rewritePartitions]] (emptied buckets deleted) — work
+  * ∝ diff + touched partitions, never ∝ view. Keys folding to n ≤ 0
+  * leave the view.
   */
 object ViewStore {
 
@@ -83,7 +84,7 @@ object ViewStore {
     * read as an empty frame instead.
     */
   private def readExisting(
-      spark: SparkSession, out: String, touched: Array[Long]): DataFrame =
+      spark: SparkSession, out: String, touched: Seq[Long]): DataFrame =
     spark.read.schema("key STRING, n BIGINT, key_hash INT").parquet(out)
       .filter(col("key_hash").cast("long").isin(touched: _*))
       .select(col("key"), col("n"), col("key_hash").cast("long").as("key_hash"))
@@ -222,34 +223,15 @@ object ViewStore {
     // fold: affected keys REPLACE their view rows (or vanish if their
     // group emptied); co-located unaffected keys carry through
     val d = checkpoint.truncate(withKeyHash(affected, keyBuckets))
-    val touched = d.select(col("key_hash")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val existing = readExisting(spark, out, touched)
-    val carried = existing.join(broadcast(affected), Seq("key"), "left_anti")
-    val updated = checkpoint.truncate( // materialize before overwriting the input dir
-      carried.unionByName(withKeyHash(recomputed, keyBuckets)))
-    // surviving-bucket set observed DURING the write (≤ keyBuckets
-    // values) instead of a separate post-write job
-    val obsM = new org.apache.spark.sql.Observation(
-      s"view.max.${java.util.UUID.randomUUID()}")
-    updated.observe(obsM, collect_set(col("key_hash")).as("kh"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("key_hash")
-      .parquet(out)
-    val surviving = obsM.get("kh").asInstanceOf[Seq[Long]].toSet
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { kh =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"key_hash=$kh"), true)
+    rewriteTouched(spark, out, d, checkpoint, foldId) { touched =>
+      readExisting(spark, out, touched)
+        .join(broadcast(affected), Seq("key"), "left_anti")
+        .unionByName(withKeyHash(recomputed, keyBuckets))
     }
-    foldId.foreach(markApplied(spark, out, _))
   }
 
   /** The shared fold tail: apply per-key deltas to the stored view —
-    * touched-partition read, full-outer merge, dynamic overwrite, explicit
-    * delete of emptied buckets.
+    * touched-partition read, full-outer merge, keys folding to n ≤ 0 leave.
     */
   private def foldInto(
       spark: SparkSession, out: String, deltas: DataFrame,
@@ -259,35 +241,28 @@ object ViewStore {
     if (foldId.exists(alreadyApplied(spark, out, _))) return
     val d = checkpoint.truncate( // materialized ONCE: sized ∝ diff, read twice below
       withKeyHash(deltas.filter(col("dn") =!= 0L), keyBuckets))
-    val touched = d.select(col("key_hash")).distinct()
-      .collect().map(_.getLong(0)) // bounded by keyBuckets, never by data
-    if (touched.isEmpty) { foldId.foreach(markApplied(spark, out, _)); return }
-    val existing = readExisting(spark, out, touched)
-    val updated = existing
-      .join(d, Seq("key_hash", "key"), "full_outer")
-      .select(col("key"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-        col("key_hash"))
-      .filter(col("n") > 0)
-      .transform(checkpoint.truncate _) // materialize before the dynamic
-                                          // overwrite reads its own input dir
-    // surviving-bucket set observed DURING the write (≤ keyBuckets values)
-    val obsF = new org.apache.spark.sql.Observation(
-      s"view.fold.${java.util.UUID.randomUUID()}")
-    updated.observe(obsF, collect_set(col("key_hash")).as("kh"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("key_hash")
-      .parquet(out)
-    // dynamic overwrite only replaces partitions PRESENT in the written
-    // data — a touched bucket whose keys all folded to zero emits no rows
-    // and would keep its stale files; delete those partitions explicitly
-    val surviving = obsF.get("kh").asInstanceOf[Seq[Long]].toSet
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { kh =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"key_hash=$kh"), true)
+    rewriteTouched(spark, out, d, checkpoint, foldId) { touched =>
+      readExisting(spark, out, touched)
+        .join(d, Seq("key_hash", "key"), "full_outer")
+        .select(col("key"),
+          (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+          col("key_hash"))
+        .filter(col("n") > 0)
     }
+  }
+
+  /** Rewrite the key_hash partitions `d` touches with `updated(touched)`
+    * (staged through `checkpoint`: the dynamic overwrite reads its own
+    * input dir) via [[PartitionedLsm.rewritePartitions]], which deletes
+    * emptied buckets; then record the fold in the ledger.
+    */
+  private def rewriteTouched(
+      spark: SparkSession, out: String, d: DataFrame, checkpoint: CheckpointPolicy,
+      foldId: Option[String])(updated: Seq[Long] => DataFrame): Unit = {
+    val touched = PartitionedLsm.touched(d, "key_hash")
+    if (touched.nonEmpty)
+      PartitionedLsm.rewritePartitions(
+        checkpoint.truncate(updated(touched)), out, "key_hash", touched)
     foldId.foreach(markApplied(spark, out, _))
   }
 
@@ -296,31 +271,18 @@ object ViewStore {
   // at-least-once replay, or a job retried after its write committed)
   // silently corrupts the view. Callers that can replay pass a stable
   // foldId (e.g. the checkpointed micro-batch id) and the fold becomes
-  // idempotent: a marker per applied fold lives beside the view (the
-  // Materialize._delta_batches / snapshot-log discipline), and a fold
-  // whose marker exists is skipped. MAX-view folds are idempotent in
-  // value but skip too — cheaper and uniform.
+  // idempotent: one [[PartitionedLsm]] marker per applied fold beside the
+  // view; a fold whose marker exists is skipped. MAX-view folds are
+  // idempotent in value but skip too — cheaper and uniform.
 
   private def ledgerDir(out: String) = s"$out/_applied"
 
-  private def fsOf(spark: SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
+  private def alreadyApplied(spark: SparkSession, out: String, id: String): Boolean =
+    PartitionedLsm.hasMarker(spark, ledgerDir(out), s"fold-$id")
 
-  private def alreadyApplied(spark: SparkSession, out: String, id: String): Boolean = {
-    val (fs, dir) = fsOf(spark, ledgerDir(out))
-    fs.exists(new org.apache.hadoop.fs.Path(dir, s"fold-$id"))
-  }
+  private def markApplied(spark: SparkSession, out: String, id: String): Unit =
+    PartitionedLsm.addMarker(spark, ledgerDir(out), s"fold-$id")
 
-  private def markApplied(spark: SparkSession, out: String, id: String): Unit = {
-    val (fs, dir) = fsOf(spark, ledgerDir(out))
-    fs.mkdirs(dir)
-    fs.create(new org.apache.hadoop.fs.Path(dir, s"fold-$id"), false).close()
-  }
-
-  private def clearLedger(spark: SparkSession, out: String): Unit = {
-    val (fs, dir) = fsOf(spark, ledgerDir(out))
-    fs.delete(dir, true)
-  }
+  private def clearLedger(spark: SparkSession, out: String): Unit =
+    PartitionedLsm.dropDir(spark, ledgerDir(out))
 }

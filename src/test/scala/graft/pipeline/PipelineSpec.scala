@@ -428,6 +428,29 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("mergeDelta re-asserts a triple that a pending tombstone retracts") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0L)
+    val out = Files.createTempDirectory("graft_merge_reassert_").toString
+    def merged() = Materialize.readMerged(spark, out)
+      .select("subj").as[String].collect().toSet
+    try {
+      Materialize.write(Seq(
+        TripleRow("<a>", "<p>", "\"1\"", "u", ts),
+        TripleRow("<b>", "<p>", "\"2\"", "u", ts)).toDS(), out)
+      Materialize.appendDeltaOps(spark, out,
+        Seq(("<a>", "<p>", "\"1\"", "u", ts, Materialize.OpDel))
+          .toDF("subj", "pred", "obj", "src_url", "warc_ts", "op"))
+      assert(merged() == Set("<b>"))
+      // the re-assertion is newer than the pending retraction: it must win
+      Materialize.mergeDelta(spark, out, Seq(TripleRow("<a>", "<p>", "\"1\"", "v", ts)).toDS())
+      assert(merged() == Set("<a>", "<b>"), "a pending tombstone hid the merged re-assertion")
+      assert(Materialize.read(spark, out).select("subj").as[String].collect().toSet ==
+        Set("<a>", "<b>"))
+    } finally
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("ViewStore: count view folds a diff in O(diff); untouched key partitions stay; zeroed keys vanish") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
