@@ -1,21 +1,25 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-/** Candidate entity linking:
+/** Candidate entity linking, one pass per mention row:
   *   1. BLOCKING — MinHash-LSH over character 3-gram shingles of surface
-  *      forms vs dictionary aliases, expressed as a band-key equi-join
-  *      (dictionary side broadcast when small). Identical strings share all
-  *      bands, so exact matches have recall 1; near-duplicate surfaces
-  *      (case/spacing variants) collide in ≥1 band with high probability.
+  *      forms vs dictionary aliases. The [[AliasIndex]] is built on the
+  *      driver from the dictionary: exact alias → entities plus band
+  *      bucket → entities, oversized buckets quarantined. Identical strings
+  *      are always candidates (exact recall 1); near-duplicate surfaces
+  *      (case/spacing variants) share ≥1 band with high probability.
   *   2. SCORING — TF-IDF cosine between the mention's paragraph tokens and
-  *      the entity profile (name + topic tokens), expressed entirely as
-  *      DataFrame joins/aggregations (Catalyst-optimizable, no UDF in the
-  *      shuffle path).
-  *   3. TOP-1 — ranking window per mention (score desc, entity asc
-  *      tie-break).
+  *      the entity profile (name + topic tokens). Document frequencies are
+  *      ONE aggregation over the mention table; idf, the entity vectors and
+  *      their norms are built from it on the driver and shipped with the
+  *      index in one broadcast.
+  *   3. TOP-1 — per row, (score desc, entity_iri asc).
+  *
+  * Bound: the dictionary, the profiles and the idf vocabulary live on the
+  * driver and in every executor (the old relational plan broadcast the
+  * same three tables); the mention table never shuffles.
   */
 object Linking {
 
@@ -75,219 +79,184 @@ object Linking {
   def entityProfile(entityIri: String, name: String, topics: Seq[String]): Seq[String] =
     (tokenize(name) ++ topics.map(_.toLowerCase(java.util.Locale.ROOT))).distinct
 
-  /** Alias band-buckets above this size are quarantined from the band join
-    * (a self-similar alias universe floods a band; candidates from such a
-    * bucket fan out |surfaces∩bucket| × |aliases∩bucket| in one task). The
-    * exact-match union in [[block]] keeps recall 1.0 for identical strings
-    * regardless of quarantining, so only near-miss (fuzzy) recall inside
-    * the flooded bucket is traded — the bucket is, by construction, noise.
+  /** Alias band-buckets holding more dictionary rows than this are
+    * quarantined from blocking (a self-similar alias universe floods a
+    * band; every surface in such a bucket would fan out to the whole
+    * bucket). Exact surface == alias matches stay candidates regardless,
+    * so only near-miss (fuzzy) recall inside the flooded bucket is traded —
+    * the bucket is, by construction, noise.
     */
   val MaxAliasBandBucket = 1024
 
-  /** AUDIT surface for the [[block]] quarantine (no silent caps — the
-    * td09/td12 `*HotBands` discipline): alias band-buckets larger than the
-    * cap, with sizes. [[block]] evaluates it on the (small, broadcastable)
-    * dictionary side and WARNS when any bucket is quarantined; callers
-    * inspecting a recall regression read this table offline.
+  /** AUDIT surface for the quarantine (no silent caps — the td09/td12
+    * `*HotBands` discipline): (band_id, band_hash, n_aliases) of every
+    * alias band-bucket larger than the cap, from the [[AliasIndex]]'s own
+    * bucketing. [[block]] and [[link]] warn whenever it would be non-empty.
     */
   def aliasHotBands(
       dict: Dataset[EntityAlias],
       maxAliasBandBucket: Int = MaxAliasBandBucket): DataFrame = {
     val spark = dict.sparkSession
     import spark.implicits._
-    dict.flatMap(ea => bandKeys(ea.alias).map { case (b, h) => (b, h) })
-      .toDF("band_id", "band_hash")
-      .groupBy($"band_id", $"band_hash").agg(count(lit(1)).as("n_aliases"))
-      .filter($"n_aliases" > maxAliasBandBucket)
+    AliasIndex(dict.collect().toSeq, maxAliasBandBucket).hotBands
+      .map { case ((b, h), n) => (b, h, n) }.toDF("band_id", "band_hash", "n_aliases")
   }
 
   private val logger = org.slf4j.LoggerFactory.getLogger("graft.pipeline.Linking")
 
-  /** Stage 1: blocking. `mentions` needs (mention_id, surface) columns.
-    * Output: (mention_id, entity_iri) candidate pairs. */
+  /** The dictionary's index, built on the driver; a quarantined bucket is a
+    * data-quality event and always surfaces as a warning.
+    */
+  private def index(dict: Dataset[EntityAlias], maxAliasBandBucket: Int): AliasIndex = {
+    val ix = AliasIndex(dict.collect().toSeq, maxAliasBandBucket)
+    if (ix.hotBands.nonEmpty)
+      logger.warn(s"Linking: quarantined ${ix.hotBands.size} alias band-bucket(s) " +
+        s"larger than $maxAliasBandBucket from blocking " +
+        "(exact-match recall unaffected; see Linking.aliasHotBands)")
+    ix
+  }
+
+  /** Blocking alone: the candidates [[link]] scores. `mentions` needs
+    * (mention_id, surface) columns. Output: (mention_id, entity_iri), one
+    * row per candidate of each mention row.
+    */
   def block(
       mentions: DataFrame,
       dict: Dataset[EntityAlias],
-      maxAliasBandBucket: Int = MaxAliasBandBucket,
-      auditQuarantine: Boolean = false): DataFrame = {
+      maxAliasBandBucket: Int = MaxAliasBandBucket): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
-
-    // quarantine audit (opt-in): a flooded alias universe is a
-    // data-quality event worth surfacing, but the audit is its own Spark
-    // job over the dictionary, so the common unflooded path doesn't pay it
-    // per call — [[aliasHotBands]] stays the offline surface either way.
-    if (auditQuarantine) {
-      val nHotBuckets = aliasHotBands(dict, maxAliasBandBucket).count()
-      if (nHotBuckets > 0)
-        logger.warn(s"Linking.block: quarantined $nHotBuckets alias band-bucket(s) " +
-          s"larger than $maxAliasBandBucket from the LSH band join " +
-          "(exact-match recall unaffected; see Linking.aliasHotBands)")
-    }
-
-    // distinct surfaces only — the band fan-out runs once per unique string,
-    // not once per occurrence (mentions of hot entities are heavily skewed).
-    // ONE distinct over the (widest) mention table, persisted: both the
-    // band fan-out and the exact-match union read it — two independent
-    // distincts would scan + shuffle the big table twice
-    val distinctSurfaces = mentions.select($"surface").distinct().persist()
-    val surfaceBands = distinctSurfaces
-      .flatMap { r =>
-        val s = r.getString(0)
-        bandKeys(s).map { case (b, h) => (s, b, h) }
-      }.toDF("surface", "band_id", "band_hash")
-
-    val aliasBands = dict
-      .flatMap { ea => bandKeys(ea.alias).map { case (b, h) => (ea.alias, ea.entity_iri, b, h) } }
-      .toDF("alias", "entity_iri", "band_id", "band_hash")
-
-    // hot-bucket cap on the alias side (see MaxAliasBandBucket)
-    val wBand = Window.partitionBy($"band_id", $"band_hash")
-    val aliasCapped = aliasBands
-      .withColumn("_bucket_n", count(lit(1)).over(wBand))
-      .filter($"_bucket_n" <= maxAliasBandBucket)
-      .drop("_bucket_n")
-
-    // dictionary side is the small side → broadcast hash join, no shuffle
-    // of the (large) mention-surface table beyond its own distinct.
-    // Exact surface==alias matches are unioned in directly: identical
-    // strings must be candidates even when their band bucket is capped.
-    val exactPairs = distinctSurfaces
-      .join(broadcast(dict.toDF().select($"alias".as("surface"), $"entity_iri")), "surface")
-      .select($"surface", $"entity_iri")
-    // pairs ≤ |surfaces| × few candidates — eagerly checkpoint the SMALL
-    // result so the distinct-surfaces cache can be released before
-    // returning (the lazy return value must not pin it)
-    val pairs = surfaceBands
-      .join(broadcast(aliasCapped), Seq("band_id", "band_hash"))
-      .select($"surface", $"entity_iri")
-      .unionByName(exactPairs)
-      .distinct()
-      .localCheckpoint()
-    // blocking: the default async removal races any storage accounting the
-    // caller does right after return (surfaced as PipelineSpec flakiness
-    // once the opt-in audit stopped adding a job between persist and here)
-    distinctSurfaces.unpersist(blocking = true)
-
-    // broadcast so the (big, skewed) mention table never shuffles on the
-    // hot surface strings
-    mentions.select($"mention_id", $"surface")
-      .join(broadcast(pairs), "surface")
-      .select($"mention_id", $"entity_iri")
+    val ix = spark.sparkContext.broadcast(index(dict, maxAliasBandBucket))
+    mentions.select($"mention_id", $"surface").as[(Long, String)].flatMap { case (id, s) =>
+      val x = ix.value
+      x.candidates(s).map(e => (id, x.entities(e)))
+    }.toDF("mention_id", "entity_iri")
   }
 
-  /** Stage 2+3: TF-IDF cosine scoring + top-1 ranking window.
-    * `profiles`: (entity_iri, token) exploded entity profiles.
+  /** A context's token ids: Spark's `lower`, `split` on non-word runs,
+    * empties dropped, each token dictionary-encoded by `xxhash64`
+    * (vocabulary interning, reference `src/build.rs:75-91`). A 64-bit
+    * collision would merge two vocabulary terms; at 2^64 over a web
+    * vocabulary the expected count is ~0, and any collision is
+    * deterministic. The context sits in the once-per-row argument, never
+    * inside a lambda.
     */
-  def scoreAndRank(
-      mentions: DataFrame,
-      candidates: DataFrame,
-      profiles: DataFrame,
-      knownMentionCount: Option[Long] = None): Dataset[Candidate] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
+  private def tokenIds(context: Column): Column =
+    transform(filter(split(lower(context), "[^\\p{L}\\p{N}&]+"), t => length(t) > 0), xxhash64(_))
 
-    // ONE shuffle by mention_id up front: HashPartitioning(mention_id)
-    // satisfies the clustering of every downstream keyed op — the tf
-    // groupBy (mention_id, token), the norm groupBy, the dot groupBy and
-    // the final argmax all reuse this exchange instead of re-shuffling the
-    // exploded token table (the widest data in the stage).
-    val mentionsPart = mentions.repartition($"mention_id")
+  /** Everything the per-row pass reads, in one broadcast. An entity's
+    * vector is its corpus tids (weight idf) sorted, so identical profiles score
+    * bit-identically and a tie falls to the lower entity index, i.e. the
+    * lower IRI.
+    */
+  private final case class Scorer(
+      index: AliasIndex,
+      idf: Map[Long, Double],
+      entityTids: Array[Array[Long]],
+      entityNorm: Array[Double]) {
 
-    // `tid` dictionary-encodes the token AT THE EXPLODE (vocabulary
-    // interning, reference `src/build.rs:75-91`): every aggregation and
-    // join downstream — the widest data in the stage — carries an 8-byte
-    // key; token strings never enter a hash table. (xxhash64 collisions
-    // would merge two vocabulary terms; at 2^64 over a web vocabulary the
-    // expected collision count is ~0, and any collision is deterministic.)
-    val mentionTokens = mentionsPart
-      .select($"mention_id", explode(split(lower($"context"), "[^\\p{L}\\p{N}&]+")).as("token"))
-      .filter(length($"token") > 0)
-      .select($"mention_id", xxhash64($"token").as("tid"))
-
-    // the orchestrator already knows |mentions| from its stage manifest —
-    // don't pay another scan when provided
-    val nMentions = knownMentionCount
-      .getOrElse(mentions.select($"mention_id").distinct().count()).toDouble
-
-    // ONE pass over the exploded token table (the widest data in the
-    // stage): pre-aggregate (mention_id, tid) → tf, then derive BOTH the
-    // per-mention weights and the document frequencies from it. Before,
-    // idf ran its own `distinct()` over the full explode — a second wide
-    // aggregation of the same rows; tf's key set IS the distinct set, so
-    // df = count per tid over tf. Cached: tf feeds idf, the norm
-    // aggregation and the dot-product join.
-    val tf = mentionTokens
-      .groupBy($"mention_id", $"tid").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // document frequency over mention contexts → IDF. Cached: it feeds two
-    // broadcasts (mention weights + entity weights) and is tiny.
-    val idf = tf
-      .groupBy($"tid").agg(count(lit(1)).as("df"))
-      .withColumn("idf", log(lit(1.0) + lit(nMentions) / $"df"))
-      .cache()
-
-    // cheap projection over the cached tf (broadcast join) — recomputing it
-    // per consumer no longer re-runs the explode
-    val mentionVec = tf
-      .join(broadcast(idf), "tid") // idf ≈ |vocabulary| rows — tiny
-      .select($"mention_id", $"tid", ($"tf" * $"idf").as("w"))
-
-    val mentionNorm = mentionVec.groupBy($"mention_id")
-      .agg(sqrt(sum($"w" * $"w")).as("m_norm"))
-
-    val entityVec = profiles
-      .withColumn("tid", xxhash64($"token"))
-      .join(broadcast(idf), "tid") // tokens absent from the corpus can't contribute
-      .select($"entity_iri", $"tid", $"idf".as("w"))
-
-    val entityNorm = entityVec.groupBy($"entity_iri")
-      .agg(sqrt(sum($"w" * $"w")).as("e_norm"))
-
-    val dots = candidates
-      .join(mentionVec, "mention_id")
-      .join(broadcast(entityVec.withColumnRenamed("w", "ew")), Seq("entity_iri", "tid"))
-      .groupBy($"mention_id", $"entity_iri")
-      .agg(sum($"w" * $"ew").as("dot"))
-
-    val scored = dots
-      .join(mentionNorm, "mention_id")
-      .join(broadcast(entityNorm), "entity_iri")
-      .select($"mention_id", $"entity_iri",
-        ($"dot" / ($"m_norm" * $"e_norm")).as("score"))
-
-    // top-1 as a hash-aggregate argmax rather than a ranking window: same
-    // (score desc, entity asc) tie-break via min_by on (-score, entity),
-    // but no whole-partition sort — and the groupBy rides the mention_id
-    // partitioning established above. Deterministic: the ordering struct
-    // is unique per (mention, entity).
-    val top1 = scored.groupBy($"mention_id")
-      .agg(min_by(struct($"entity_iri", $"score"),
-        struct(($"score" * -1).as("neg"), $"entity_iri")).as("best"))
-      .select($"mention_id", $"best.entity_iri".as("entity_iri"), $"best.score".as("score"))
-      .as[Candidate]
-
-    // materialize the (small) per-mention result eagerly so the stage's
-    // working caches can be RELEASED before returning — a long-lived
-    // session running many link jobs must not accumulate storage blocks
-    val result = top1.localCheckpoint(eager = true)
-    idf.unpersist(blocking = false)
-    tf.unpersist(blocking = false)
-    result
+    /** TF-IDF cosine top-1 of one mention row: w = tf·idf; a candidate is
+      * scored only if it shares ≥1 token; (score desc, entity_iri asc).
+      */
+    def best(mentionId: Long, surface: String, tids: Array[Long]): Option[Candidate] = {
+      val cands = index.candidates(surface)
+      if (cands.isEmpty || tids == null) None
+      else {
+        val w = tids.groupMapReduce(identity)(_ => 1L)(_ + _)
+          .collect { case (t, tf) if idf.contains(t) => t -> tf * idf(t) }
+        val mNorm = math.sqrt(w.valuesIterator.map(x => x * x).sum)
+        var bestE = -1
+        var bestScore = 0.0
+        cands.foreach { e =>
+          val ts = entityTids(e)
+          var dot = 0.0
+          var shared = false
+          var j = 0
+          while (j < ts.length) {
+            w.get(ts(j)).foreach { x => dot += x * idf(ts(j)); shared = true }
+            j += 1
+          }
+          // candidates ascend, so only a strictly higher score displaces
+          if (shared) {
+            val score = dot / (mNorm * entityNorm(e))
+            if (bestE < 0 || score > bestScore) { bestE = e; bestScore = score }
+          }
+        }
+        if (bestE < 0) None else Some(Candidate(mentionId, index.entities(bestE), bestScore))
+      }
+    }
   }
 
-  /** Full linking stage. The quarantine audit runs HERE — once per link
-    * job at the pipeline entry point, so a flooded alias universe always
-    * surfaces as a warning (the audit job is dictionary-sized, a rounding
-    * error next to the stage) — while [[block]] keeps it opt-out for
-    * callers composing it into per-batch hot loops.
+  /** Full linking stage over (mention_id, surface, context) rows and the
+    * (entity_iri, token) profiles: one document-frequency aggregation
+    * (idf = ln(1 + N/df), N = mention rows, counted on the same job), then
+    * a lazy per-row pass — the caller's write is its only other action.
     */
   def link(
       mentions: DataFrame,
       dict: Dataset[EntityAlias],
-      profiles: DataFrame,
-      knownMentionCount: Option[Long] = None): Dataset[Candidate] =
-    scoreAndRank(mentions, block(mentions, dict, auditQuarantine = true),
-      profiles, knownMentionCount)
+      profiles: DataFrame): Dataset[Candidate] = {
+    val spark = mentions.sparkSession
+    import spark.implicits._
+    val ix = index(dict, MaxAliasBandBucket)
+    val rows = mentions.select($"mention_id", $"surface", tokenIds($"context").as("tids"))
+
+    val n = new Observation()
+    val df = rows.observe(n, count(lit(1)).as("n"))
+      .select(explode(array_distinct($"tids")).as("tid"))
+      .groupBy($"tid").count().as[(Long, Long)].collect()
+    val nRows = n.get("n").asInstanceOf[Long].toDouble
+    // StrictMath: Spark's `log` — the same idf bits as a SQL evaluation
+    val idf = df.iterator.map { case (t, d) => t -> StrictMath.log(1.0 + nRows / d) }.toMap
+
+    // tokens absent from the corpus can't contribute
+    val pos = ix.entities.zipWithIndex.toMap
+    val vecs = profiles.select($"entity_iri", xxhash64($"token")).as[(String, Long)].collect()
+      .filter { case (e, t) => pos.contains(e) && idf.contains(t) }
+      .groupMap(p => pos(p._1))(_._2)
+    val tids = Array.tabulate(ix.entities.length)(e => vecs.get(e).fold(Array.emptyLongArray)(_.sorted))
+    val norms = tids.map(ts => math.sqrt(ts.map(idf).map(x => x * x).sum))
+    val scorer = spark.sparkContext.broadcast(Scorer(ix, idf, tids, norms))
+
+    rows.as[(Long, String, Array[Long])].flatMap { case (id, s, t) => scorer.value.best(id, s, t) }
+  }
+}
+
+/** Driver-built blocking index over the dictionary. Entity IRIs are sorted
+  * and numbered, so candidate order is IRI order. A band bucket holding
+  * more than the cap's dictionary rows is quarantined and listed in
+  * [[hotBands]]. Every dictionary alias's candidate set (exact entities ∪
+  * its kept band buckets) is precomputed — Aho–Corasick surfaces are
+  * aliases, so the band fan-out runs once per unique string; any other
+  * surface falls back to its [[Linking.bandKeys]].
+  */
+final class AliasIndex private (
+    val entities: Array[String],
+    byAlias: Map[String, Array[Int]],
+    buckets: Map[(Int, Long), Array[Int]],
+    val hotBands: Seq[((Int, Long), Long)]) extends Serializable {
+
+  /** Candidate entity indices of a surface, ascending. */
+  def candidates(surface: String): Array[Int] =
+    if (surface == null) Array.emptyIntArray
+    else byAlias.getOrElse(surface, AliasIndex.fanOut(Nil, Linking.bandKeys(surface), buckets))
+}
+
+object AliasIndex {
+  def apply(dict: Seq[EntityAlias], cap: Int): AliasIndex = {
+    val entities = dict.map(_.entity_iri).distinct.sorted.toArray
+    val pos = entities.zipWithIndex.toMap
+    val keys = dict.map(_.alias).distinct.map(a => a -> Linking.bandKeys(a)).toMap
+    val bands = dict.flatMap(ea => keys(ea.alias).map(_ -> pos(ea.entity_iri))).groupMap(_._1)(_._2)
+    val (hot, kept) = bands.partition(_._2.size > cap)
+    val buckets = kept.map { case (k, es) => k -> es.distinct.sorted.toArray }
+    val byAlias = dict.groupMap(_.alias)(ea => pos(ea.entity_iri))
+      .map { case (a, exact) => a -> fanOut(exact, keys(a), buckets) }
+    new AliasIndex(entities, byAlias, buckets,
+      hot.map { case (k, es) => k -> es.size.toLong }.toSeq.sorted)
+  }
+
+  private def fanOut(
+      exact: Seq[Int], keys: Seq[(Int, Long)], buckets: Map[(Int, Long), Array[Int]]): Array[Int] =
+    (exact ++ keys.flatMap(buckets.getOrElse(_, Array.emptyIntArray))).distinct.sorted.toArray
 }

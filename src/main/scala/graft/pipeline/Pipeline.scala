@@ -102,15 +102,9 @@ object Pipeline {
         Mentions.detect(extracted.select($"url", $"text"), aliasSurfaces)).toDF()
     }
 
-    // the linker scans the mention table ~6 times (distinct surfaces, token
-    // explode, tf, norms, candidate join) — cache the slim columns once
-    // instead of re-reading the snapshot per scan
-    val mentionsSlim = mentions.select($"mention_id", $"surface", $"context").cache()
     val links = stage("links") {
-      Linking.link(mentionsSlim, dictDf.as[EntityAlias], profiles(spark, nEntities),
-        knownMentionCount = rows.get("mentions")).toDF()
+      Linking.link(mentions, dictDf.as[EntityAlias], profiles(spark, nEntities)).toDF()
     }
-    mentionsSlim.unpersist(blocking = false)
 
     val canonical = stage("canonical") {
       Canonical.canonicalMapping(dictDf, checkpoint = checkpoint)

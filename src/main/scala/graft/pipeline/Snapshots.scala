@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Stage-granular resumable snapshots.
   *
@@ -42,14 +44,18 @@ final class SnapshotStore(root: String, spark: SparkSession, config: String = ""
     fs.exists(new Path(dir(stage), "_SUCCESS")) && fs.exists(manifest(stage)) &&
       manifestConfig(stage) == fullConfig
 
-  private def manifestConfig(stage: String): String = {
+  private def manifestText(stage: String): String = {
     val in = fs.open(manifest(stage))
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    """"config":"([^"]*)"""".r.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
+
+  private def manifestConfig(stage: String): String =
+    """"config":"([^"]*)"""".r.findFirstMatchIn(manifestText(stage)).map(_.group(1)).getOrElse("")
+
+  private def manifestRows(stage: String): Long =
+    """"rows":(\d+)""".r.findFirstMatchIn(manifestText(stage)).get.group(1).toLong
 
   def load(stage: String): DataFrame = spark.read.parquet(dir(stage).toString)
 
@@ -65,22 +71,23 @@ final class SnapshotStore(root: String, spark: SparkSession, config: String = ""
   /** Run a stage through the snapshot gate: skip when committed, else
     * compute → write → manifest → read back (downstream reads the
     * committed bytes, never the in-flight plan). Returns the DataFrame and
-    * its row count (from the committed footers — callers must not pay a
-    * second count job).
+    * its row count. A commit is ONE job: the count rides the write as an
+    * observed metric and the read-back takes `compute`'s schema (as a
+    * parquet read infers it: every field nullable) instead of inferring it;
+    * a committed stage's count comes from its manifest.
     */
-  def run(stage: String)(compute: => DataFrame): (DataFrame, Long) = {
-    if (committed(stage)) {
-      val df = load(stage)
-      (df, df.count())
-    } else {
+  def run(stage: String)(compute: => DataFrame): (DataFrame, Long) =
+    if (committed(stage)) (load(stage), manifestRows(stage))
+    else {
       val t0 = System.currentTimeMillis()
-      compute.write.mode("overwrite").parquet(dir(stage).toString)
-      val back = load(stage)
-      val rows = back.count() // metadata-only parquet count
+      val df = compute
+      val obs = new Observation()
+      df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite").parquet(dir(stage).toString)
+      val rows = obs.get("n").asInstanceOf[Long]
       writeManifest(stage, rows, System.currentTimeMillis() - t0)
-      (back, rows)
+      val schema = SnapshotStore.nullable(df.schema).asInstanceOf[StructType]
+      (spark.read.schema(schema).parquet(dir(stage).toString), rows)
     }
-  }
 
   /** Drop a stage's snapshot (test helper for kill/resume scenarios). */
   def invalidate(stage: String): Unit = {
@@ -100,4 +107,15 @@ object SnapshotStore {
     * instead of silently serving.
     */
   val FormatVersion = 2
+
+  /** `t` with every field, array element and map value nullable: the
+    * schema a parquet read infers for data written from `t`.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }
